@@ -78,10 +78,13 @@ def _rows_matrix(vs, dim: int) -> np.ndarray:
 def _list_col_matrix(col, n_rows: int, dim: int):
     """(n_rows, dim) float64 matrix straight from an Arrow list column's
     flattened value buffer (zero per-row work). Returns None when the
-    column has nulls or ragged lengths (flatten length would not be
-    n_rows * dim) — callers fall back to the row-wise path."""
+    column has nulls or any row whose length is not ``dim`` (a matching
+    total length alone would reshape ragged rows silently) — callers
+    fall back to the row-wise path, which raises on ragged rows."""
     flat = col.flatten()
     if len(flat) != n_rows * dim or col.null_count:
+        return None
+    if not (np.diff(col.offsets.to_numpy()) == dim).all():
         return None
     m = flat.to_numpy(zero_copy_only=False)
     return m.astype(np.float64, copy=False).reshape(n_rows, dim)

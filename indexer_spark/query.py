@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .build import (
     _postings_path,
     _term_stats_path,
+    _tok_path,
+    locate_doc_ids,
     read_manifest,
     read_stats,
 )
@@ -50,6 +52,13 @@ from .compress import (
 from .lexer import term_occurrences, tokenize
 
 _SCORE_SCHEMA = "doc_id long, score double"
+
+# IndexReader._dataset: table -> (path of index_dir, pyarrow partitioning)
+_TABLES = {
+    "term_stats": (_term_stats_path, None),
+    "postings": (_postings_path, "hive"),
+    "tok": (_tok_path, "hive"),
+}
 
 # below this many candidate postings in a shard, the vectorized exhaustive
 # path beats the segment loop's per-segment Python overhead (tests lower it
@@ -164,6 +173,16 @@ class _DecodedLRU:
                     continue
                 old = self._d.pop(k)
                 self._bytes -= sum(a.nbytes for a in old)
+
+    def discard(self, keys) -> None:
+        """Drop ``keys`` (absent ones are ignored) with their pins,
+        keeping the byte count equal to the resident entries' total."""
+        with self._lock:
+            for k in keys:
+                old = self._d.pop(k, None)
+                if old is not None:
+                    self._bytes -= sum(a.nbytes for a in old)
+                self._pins.pop(k, None)
 
     def pin(self, key) -> bool:
         """Take one pin share on a RESIDENT entry (False if absent —
@@ -1186,7 +1205,10 @@ def _narrow_wire(a: np.ndarray) -> np.ndarray:
     arrays are non-negative: cumsum'd doc ids, tfs, dls) — shrinks the
     pickled wire bytes ~3-6x; _warm_install_entries widens back to the
     int64 the decoders produce, so installed entries are value- AND
-    dtype-identical to a lazy decode_block_slice."""
+    dtype-identical to a lazy decode_block_slice. An array with a
+    negative value has no unsigned form and is returned unchanged."""
+    if a.size and a.min() < 0:
+        return a
     m = int(a.max()) if a.size else 0
     for dt in (np.uint8, np.uint16, np.uint32):
         if m <= np.iinfo(dt).max:
@@ -1237,13 +1259,14 @@ class IndexReader:
         """``fast_path_bytes``: when the matched terms' total compressed
         postings payload (term_stats ``nbytes``) is below this, search()
         skips the Spark job entirely — pyarrow reads the matched rows
-        (term-predicate row-group pruning) and the SAME numpy exhaustive
-        scorer runs driver-side, so results are bit-identical to the
-        distributed plan. This removes the ~0.3-0.5 s local job-launch
-        floor for typical queries; huge-postings queries (hot terms) fall
-        through to the distributed plan. 0 disables. The 10^12-scale
-        analog is a query-service node scoring small matched sets from
-        the postings store directly, keeping Spark for the heavy ones."""
+        (term-predicate row-group pruning), scored driver-side with the
+        exhaustive scorer's arithmetic (_score_read), so results are
+        bit-identical to the distributed plan. This removes the ~0.3-0.5 s
+        local job-launch floor for typical queries; huge-postings queries
+        (hot terms) fall through to the distributed plan. 0 disables. The
+        10^12-scale analog is a query-service node scoring small matched
+        sets from the postings store directly, keeping Spark for the heavy
+        ones."""
         self.spark = spark
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
@@ -1260,11 +1283,9 @@ class IndexReader:
         # mutations of ONE index; the dir identity separates different
         # indexes living in the same session (epochs alone collide there)
         self._epoch = (index_dir, int(self.stats.get("epoch", 0)))
-        # lazily-built pyarrow dataset handles: constructing a dataset
-        # lists the directory — per-query at 10^5 shard dirs that listing
-        # would dominate the fast path, so build each handle once
-        self._ts_ds = None
-        self._post_ds = None
+        # lazily-built pyarrow dataset handles, one per table (see
+        # _dataset); _refresh_snapshot drops them all
+        self._datasets: dict[str, object] = {}
         # term -> {(shard, df, payload_len)} rows known to be decoded in
         # _DECODED_CACHE: lets repeat/warmed queries score WITHOUT the
         # per-query parquet payload read (see _fast_from_cache). Bounded
@@ -1384,6 +1405,8 @@ class IndexReader:
         consistent new snapshot instead of silently mixing two."""
         self.stats = read_stats(self.index_dir)
         self._epoch = (self.index_dir, int(self.stats.get("epoch", 0)))
+        # every handle's file listing predates the mutation
+        self._datasets.clear()
         # superseded-epoch pins would hold dead entries in the cache
         # forever; unpin them (re-warm after refresh re-pins the new set)
         stale = {k for k in self._pinned_keys if k[0] != self._epoch}
@@ -1411,47 +1434,40 @@ class IndexReader:
             if ab > 0 and avgdl_now > ab
         }
 
-    def _ts_table(self, **kw):
-        """term_stats read through the cached dataset handle, with a
-        one-shot handle rebuild if the index was mutated underneath a
-        long-lived reader (dynamic overwrite replaces part files, so a
-        pinned file listing can 404). The rebuild re-reads stats.json and
-        refreshes the epoch/derived caches (_refresh_snapshot) so the
-        reader serves the NEW snapshot consistently instead of scoring
-        new files with old parameters."""
-        import pyarrow.dataset as pads
+    def _dataset(self, table: str):
+        """Cached pyarrow dataset handle over ``table`` ("term_stats",
+        "postings" or "tok"). Constructing a dataset lists the directory
+        — per query at 10^5 shard dirs that listing would dominate the
+        driver paths — so each handle is built once per snapshot."""
+        ds = self._datasets.get(table)
+        if ds is None:
+            import pyarrow.dataset as pads
 
+            path, partitioning = _TABLES[table]
+            ds = self._datasets[table] = pads.dataset(
+                path(self.index_dir), format="parquet",
+                partitioning=partitioning,
+            )
+        return ds
+
+    def _read(self, table: str, **kw):
+        """``to_table`` through the cached handle, with a one-shot handle
+        rebuild if the index was mutated underneath a long-lived reader
+        (dynamic overwrite replaces part files, so a pinned file listing
+        can 404). The rebuild re-reads stats.json and refreshes the
+        epoch/derived caches (_refresh_snapshot) so the reader serves the
+        NEW snapshot consistently instead of scoring new files with old
+        parameters."""
         for attempt in (0, 1):
-            if self._ts_ds is None:
-                self._ts_ds = pads.dataset(
-                    _term_stats_path(self.index_dir), format="parquet"
-                )
             try:
-                return self._ts_ds.to_table(**kw)
+                return self._dataset(table).to_table(**kw)
             except (FileNotFoundError, OSError):
-                self._ts_ds = None
                 if attempt:
                     raise
                 self._refresh_snapshot()
 
     def _post_table(self, **kw):
-        """Postings read through the cached dataset handle; same one-shot
-        rebuild-on-mutation + snapshot refresh behavior as _ts_table."""
-        import pyarrow.dataset as pads
-
-        for attempt in (0, 1):
-            if self._post_ds is None:
-                self._post_ds = pads.dataset(
-                    _postings_path(self.index_dir), format="parquet",
-                    partitioning="hive",
-                )
-            try:
-                return self._post_ds.to_table(**kw)
-            except (FileNotFoundError, OSError):
-                self._post_ds = None
-                if attempt:
-                    raise
-                self._refresh_snapshot()
+        return self._read("postings", **kw)
 
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
         """Per-term global df (pass 1 of the reference search,
@@ -1465,18 +1481,20 @@ class IndexReader:
         if missing:
             import pyarrow.dataset as pads
 
-            if self._ts_ds is None:
-                self._ts_ds = pads.dataset(
-                    _term_stats_path(self.index_dir), format="parquet"
-                )
-            ds = self._ts_ds
+            ds = self._dataset("term_stats")
             if "term" not in ds.schema.names:  # zero-postings index
                 for t in missing:
                     self._df_cache[t] = 0
                 return {t: self._df_cache[t] for t in terms}
             self._has_nbytes = "nbytes" in ds.schema.names
             self._has_poss_nbytes = "poss_nbytes" in ds.schema.names
-            tbl = self._ts_table(filter=pads.field("term").isin(missing))
+            epoch = self._epoch
+            tbl = self._read(
+                "term_stats", filter=pads.field("term").isin(missing))
+            if self._epoch != epoch:
+                # the read refreshed the snapshot, clearing the caches
+                # that the terms outside ``missing`` were served from
+                return self.global_dfs(terms)
             tlist = tbl.column("term").to_pylist()
             found = dict(
                 zip(tlist, (int(x) for x in tbl.column("df").to_pylist()))
@@ -1519,18 +1537,14 @@ class IndexReader:
             return hit
         import pyarrow.dataset as pads
 
-        if self._ts_ds is None:
-            self._ts_ds = pads.dataset(
-                _term_stats_path(self.index_dir), format="parquet"
-            )
-        ds = self._ts_ds
+        ds = self._dataset("term_stats")
         if "term" not in ds.schema.names:  # zero-postings index
             self._prefix_cache[key] = []
             return []
         self._has_nbytes = "nbytes" in ds.schema.names
         self._has_poss_nbytes = "poss_nbytes" in ds.schema.names
-        tbl = self._ts_table(
-            filter=(pads.field("term") >= prefix)
+        tbl = self._read(
+            "term_stats", filter=(pads.field("term") >= prefix)
             & (pads.field("term") < prefix + "\U0010ffff")
         )
         terms = tbl.column("term").to_pylist()
@@ -1575,17 +1589,12 @@ class IndexReader:
         on a large dictionary that materialization is avoidable driver
         memory/CPU). Returns [(term, df, nbytes)] descending."""
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
-        if self._ts_ds is None:
-            self._ts_ds = pads.dataset(
-                _term_stats_path(self.index_dir), format="parquet"
-            )
-        ds = self._ts_ds
+        ds = self._dataset("term_stats")
         if "term" not in ds.schema.names or "nbytes" not in ds.schema.names:
             return []
         self._has_nbytes = True
-        tbl = self._ts_table(columns=["term", "df", "nbytes"])
+        tbl = self._read("term_stats", columns=["term", "df", "nbytes"])
         top = tbl.take(
             pc.select_k_unstable(
                 tbl, k=min(n_terms, tbl.num_rows),
@@ -1793,11 +1802,6 @@ class IndexReader:
             with _CACHE_CAP_LOCK:
                 if want_cap > _DECODED_CACHE.max_bytes:
                     _DECODED_CACHE.max_bytes = want_cap
-        if self._post_ds is None:
-            self._post_ds = pads.dataset(
-                _postings_path(self.index_dir), format="parquet",
-                partitioning="hive",
-            )
         st = self.stats
         warmed, spent = 0, 0
         proj = 40 if raw else 16  # bytes/posting across the stored slots
@@ -1878,28 +1882,34 @@ class IndexReader:
             return None
         if any(t not in self._cached_terms for t in present):
             return None
+        covered = self._lru_chunks(present, kind, need_all=True)
+        if covered is None:
+            return None  # evicted: take the read path
+        return self._score_read(present, weights, k, require_all, kind,
+                                covered)
+
+    def _lru_chunks(self, present: list[str], kind: str,
+                    need_all: bool) -> dict[str, list] | None:
+        """term -> [(shard, decoded entry)] for every term of ``present``
+        whose recorded (shard, df, payload_len) rows are all resident in
+        the decoded LRU (bm25: -2 normpart entries; tfidf: -1 raw
+        tuples). With ``need_all``, None at the first term that is not."""
         slot = -2 if kind == "bm25" else -1
-        by_shard: dict[int, tuple[list, list]] = {}
-        for t in sorted(present):  # sorted-term order pins float order
-            w = weights[t]
-            for sh, df, ln in sorted(self._cached_terms[t]):
+        covered: dict[str, list] = {}
+        for t in present:
+            rows = self._cached_terms.get(t)
+            chunks = None if rows is None else []
+            for sh, df, ln in sorted(rows or ()):
                 hit = _DECODED_CACHE.get((self._epoch, sh, t, df, ln, slot))
                 if hit is None:
-                    return None  # evicted: take the read path
-                if kind == "bm25":
-                    d, arr = hit
-                else:
-                    d, arr, _dl = hit
-                idc, scc = by_shard.setdefault(sh, ([], []))
-                idc.append(d)
-                # (w, arr) pair: multiplied inside the per-shard worker
-                scc.append((w, arr))
-        # P8's exact-zero drop (tree.rs:456-459) is enforced inside the
-        # aggregation: it never emits zero sums
-        uids, sums = _aggregate_scores_sharded(by_shard, k, require_all)
-        uids, sums = _topk_merge(uids, sums, k)
-        self.last_path = "fast"
-        return [(int(d), float(s)) for d, s in zip(uids, sums)]
+                    chunks = None  # evicted
+                    break
+                chunks.append((sh, hit))
+            if chunks is not None:
+                covered[t] = chunks
+            elif need_all:
+                return None
+        return covered
 
     def _fast_hybrid(self, present: list[str], weights: dict[str, float],
                      k: int, require_all: int = 0,
@@ -1921,25 +1931,8 @@ class IndexReader:
         w*tf needs the raw tf, not the BM25 normalization)."""
         if self.fast_path_bytes <= 0 or not self._has_nbytes:
             return None
-        slot = -2 if kind == "bm25" else -1
-        covered: dict[str, list] = {}
-        uncovered: list[str] = []
-        for t in present:
-            rows = self._cached_terms.get(t)
-            chunks = None
-            if rows is not None:
-                chunks = []
-                for sh, df, ln in sorted(rows):
-                    hit = _DECODED_CACHE.get(
-                        (self._epoch, sh, t, df, ln, slot))
-                    if hit is None:
-                        chunks = None  # evicted -> treat as uncovered
-                        break
-                    chunks.append((int(sh), hit))
-            if chunks is None:
-                uncovered.append(t)
-            else:
-                covered[t] = chunks
+        covered = self._lru_chunks(present, kind, need_all=False)
+        uncovered = [t for t in present if t not in covered]
         if not uncovered or len(uncovered) == len(present):
             # fully covered is _fast_from_cache's job; fully uncovered is
             # _fast_scored's — this path only pays off in between
@@ -1947,95 +1940,88 @@ class IndexReader:
         if sum(self._nbytes_cache.get(t, 0) for t in uncovered) \
                 > self.fast_path_bytes:
             return None
-        import pyarrow.dataset as pads
+        return self._score_read(present, weights, k, require_all, kind,
+                                covered)
 
-        tbl = self._post_table(
-            columns=["shard", "term", "df", "docs", "tfs", "dls"],
-            filter=pads.field("term").isin(uncovered),
-        )
-        pdf = tbl.to_pandas()
-        by_term: dict[str, list] = {}
-        for row in pdf.itertuples():
-            by_term.setdefault(row.term, []).append(row)
-        st = self.stats
-        k1, b_, avgdl = st["k1"], st["b"], st["avgdl"]
-        by_shard: dict[int, tuple[list, list]] = {}
-        for t in sorted(present):  # sorted-term order pins float order
-            w = weights[t]
-            if t in covered:
-                for sh, hit in covered[t]:
-                    idc, scc = by_shard.setdefault(sh, ([], []))
-                    idc.append(hit[0])
-                    scc.append((w, hit[1]))  # normpart (bm25) or tf
-                continue
-            for row in by_term.get(t, ()):
-                base = (self._epoch, int(row.shard), t, int(row.df),
-                        len(row.docs))
-                hit = _DECODED_CACHE.get(base + (slot,))
-                if hit is None:
-                    d, tfv, dl = decode_postings(
-                        row.docs, row.tfs, row.dls, int(row.df))
-                    if kind == "bm25":
-                        normpart = _bm25_normpart(
-                            tfv.astype(np.float64), dl, k1, b_, avgdl)
-                        hit = (d, normpart)
-                    else:
-                        hit = (d, tfv, dl)
-                    _DECODED_CACHE.put(base + (slot,), hit)
-                idc, scc = by_shard.setdefault(int(row.shard), ([], []))
-                idc.append(hit[0])
-                scc.append((w, hit[1]))
-                self._record_cached(
-                    t, (int(row.shard), int(row.df), len(row.docs)))
-        uids, sums = _aggregate_scores_sharded(by_shard, k, require_all)
-        uids, sums = _topk_merge(uids, sums, k)
-        self.last_path = "fast"
-        return [(int(d), float(s)) for d, s in zip(uids, sums)]
-
-    def _fast_scored(self, present: list[str], scorer) -> list | None:
+    def _fast_scored(self, present: list[str], weights: dict[str, float],
+                     k: int, require_all: int = 0,
+                     kind: str = "bm25") -> list | None:
         """Driver fast path: when the matched postings payload is small
         (per-term nbytes from term_stats), read the matched rows with
         pyarrow (hive shard partitioning; term predicate prunes row
-        groups via the term-sorted layout) and run the SAME numpy
-        exhaustive scorer a distributed task would run — identical
-        arithmetic, identical results, no Spark job. Returns None when
-        the payload exceeds fast_path_bytes (or the index predates the
-        nbytes column), falling back to the distributed plan."""
+        groups via the term-sorted layout) and score them driver-side
+        with the distributed exhaustive scorer's arithmetic (see
+        _score_read) — identical results, no Spark job. Returns None
+        when the payload exceeds fast_path_bytes (or the index predates
+        the nbytes column), falling back to the distributed plan."""
         if self.fast_path_bytes <= 0 or not self._has_nbytes:
             return None
         total = sum(self._nbytes_cache.get(t, 0) for t in present)
         if total > self.fast_path_bytes:
             return None
+        return self._score_read(present, weights, k, require_all, kind, {})
+
+    def _score_read(self, present: list[str], weights: dict[str, float],
+                    k: int, require_all: int, kind: str,
+                    covered: dict[str, list]) -> list:
+        """Driver scoring shared by the cache, hybrid and driver-read
+        routes. ``covered`` terms bring their (shard, entry) chunks from
+        the decoded LRU; every other term's rows are point-read as Arrow
+        columns (terms x shards rows, so plain lists — no pandas),
+        decoded through the LRU (bm25: the -2 normpart, built from a
+        resident -1 raw tuple when there is one; tfidf: the -1 raw
+        tuple) and recorded for _fast_from_cache. Same per-row
+        arithmetic, sorted-term chunk order and aggregation as the
+        exhaustive scorer, so results are bit-identical to the
+        distributed plan."""
         import pyarrow.dataset as pads
 
-        if self._post_ds is None:
-            self._post_ds = pads.dataset(
-                _postings_path(self.index_dir), format="parquet",
-                partitioning="hive",
-            )
-        # shard included: the decoded-postings cache keys on it
-        tbl = self._post_table(
-            columns=["shard", "term", "df", "docs", "tfs", "dls"],
-            filter=pads.field("term").isin(present),
-        )
-        pdf = tbl.to_pandas()
-        out = scorer(pdf)
-        # record EVERY matched row so repeat queries can skip the parquet
-        # read (_fast_from_cache). Unconditional on purpose: recording
-        # only cache-resident rows would leave a term's entry PARTIAL
-        # when eviction strikes mid-scorer, and _fast_from_cache would
-        # then silently score from a subset of its shards. With the full
-        # list, any evicted entry is a get() miss -> clean fallback to
-        # the reading path.
-        for row in pdf.itertuples():
-            self._record_cached(
-                row.term, (int(row.shard), int(row.df), len(row.docs))
-            )
+        cols = ["shard", "term", "df", "docs", "tfs", "dls"]
+        uncovered = [t for t in present if t not in covered]
+        rows_by_term: dict[str, list] = {}
+        if uncovered:
+            tbl = self._post_table(
+                columns=cols, filter=pads.field("term").isin(uncovered))
+            for row in zip(*(tbl.column(c).to_pylist() for c in cols)):
+                rows_by_term.setdefault(row[1], []).append(row)
+        st = self.stats
+        slot = -2 if kind == "bm25" else -1
+        by_shard: dict[int, tuple[list, list]] = {}
+        for t in sorted(present):  # sorted-term order pins float order
+            chunks = covered.get(t)
+            if chunks is None:
+                chunks = []
+                for sh, _t, df, docs, tfs, dls in rows_by_term.get(t, ()):
+                    base = (self._epoch, sh, t, df, len(docs))
+                    hit = _DECODED_CACHE.get(base + (slot,))
+                    if hit is None:
+                        raw = (_DECODED_CACHE.get(base + (-1,))
+                               if kind == "bm25" else None)
+                        d, tfv, dl = raw or decode_postings(
+                            docs, tfs, dls, df)
+                        hit = (d, _bm25_normpart(
+                            tfv.astype(np.float64), dl,
+                            st["k1"], st["b"], st["avgdl"],
+                        )) if kind == "bm25" else (d, tfv, dl)
+                        _DECODED_CACHE.put(base + (slot,), hit)
+                    chunks.append((sh, hit))
+                    # record EVERY row read, not only resident ones: a
+                    # term recorded for a subset of its shards would let
+                    # _fast_from_cache score from that subset, while an
+                    # evicted entry of a full record is a clean get() miss
+                    self._record_cached(t, (sh, df, len(docs)))
+            w = weights[t]
+            for sh, hit in chunks:
+                idc, scc = by_shard.setdefault(sh, ([], []))
+                idc.append(hit[0])
+                # (w, arr) pair: multiplied inside the per-shard worker
+                scc.append((w, hit[1]))  # normpart (bm25) or tf (tfidf)
+        # P8's exact-zero drop (tree.rs:456-459) is enforced inside the
+        # aggregation: it never emits zero sums
+        uids, sums = _aggregate_scores_sharded(by_shard, k, require_all)
+        uids, sums = _topk_merge(uids, sums, k)
         self.last_path = "fast"
-        return [
-            (int(d), float(s))
-            for d, s in zip(out["doc_id"].to_numpy(), out["score"].to_numpy())
-        ]
+        return [(int(d), float(s)) for d, s in zip(uids, sums)]
 
     def _fast_phrase(self, present: list[str], scorer, k: int,
                      label: str = "fast_phrase",
@@ -2101,11 +2087,6 @@ class IndexReader:
                 pass  # evicted somewhere: take the reading path
         import pyarrow.dataset as pads
 
-        if self._post_ds is None:
-            self._post_ds = pads.dataset(
-                _postings_path(self.index_dir), format="parquet",
-                partitioning="hive",
-            )
         tbl = self._post_table(
             columns=cols,
             filter=pads.field("term").isin(present),
@@ -2286,8 +2267,6 @@ class IndexReader:
         local_idx + a broadcast shard-offset map — the join key the
         facet / export / filtered-search plans share. Returns a
         DataFrame (doc_id, *cols)."""
-        from .build import _tok_path
-
         items = sorted(
             (int(s), int(o))
             for s, o in self.stats["shard_offsets"].items()
@@ -2396,33 +2375,12 @@ class IndexReader:
         if hits == []:
             return []
         if hits is not None and len(hits) <= self.FACET_DRIVER_MAX_DOCS:
-            from .build import _tok_path, locate_doc_ids
-
-            import pyarrow.dataset as pads
-
-            loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
-            shards = sorted({s for s, _ in loc.values()})
-            locals_ = sorted({li for _, li in loc.values()})
-            ds = pads.dataset(_tok_path(self.index_dir), format="parquet",
-                              partitioning="hive")
-            tbl = ds.to_table(
-                columns=["shard", "local_idx", by],
-                filter=pads.field("shard").isin(shards)
-                & pads.field("local_idx").isin(locals_),
-            )
-            val_of = {
-                (int(s), int(li)): v
-                for s, li, v in zip(tbl.column("shard").to_pylist(),
-                                    tbl.column("local_idx").to_pylist(),
-                                    tbl.column(by).to_pylist())
-            }
+            vals = self._tok_rows(hits, [by])
             counts: dict = {}
             for d, _s in hits:
-                key = loc.get(int(d))
-                if key is None or key not in val_of:
-                    continue
-                v = val_of[key]
-                counts[v] = counts.get(v, 0) + 1
+                row = vals.get(int(d))
+                if row is not None:
+                    counts[row[0]] = counts.get(row[0], 0) + 1
             out = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
             return out[:k]
         # distributed: full scored set, no global order, tiny final agg
@@ -2514,32 +2472,10 @@ class IndexReader:
         if hits == []:
             return []
         if hits is not None and len(hits) <= self.FACET_DRIVER_MAX_DOCS:
-            from .build import _tok_path, locate_doc_ids
-
-            import pyarrow.dataset as pads
-
-            loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
-            ds = pads.dataset(_tok_path(self.index_dir), format="parquet",
-                              partitioning="hive")
-            tbl = ds.to_table(
-                columns=["shard", "local_idx"] + cols,
-                filter=pads.field("shard").isin(
-                    sorted({s for s, _ in loc.values()}))
-                & pads.field("local_idx").isin(
-                    sorted({li for _, li in loc.values()})),
-            )
-            attr = {
-                (int(s), int(li)): vals
-                for s, li, *vals in zip(
-                    tbl.column("shard").to_pylist(),
-                    tbl.column("local_idx").to_pylist(),
-                    *[tbl.column(c).to_pylist() for c in cols],
-                )
-            }
+            attr = self._tok_rows(hits, cols)
             out = []
             for d, s in hits:  # hits arrive (score desc, doc_id asc)
-                key = loc.get(int(d))
-                vals = attr.get(key) if key is not None else None
+                vals = attr.get(int(d))
                 if vals is None:
                     continue
                 if all(v in allow[c] for c, v in zip(cols, vals)):
@@ -2769,13 +2705,7 @@ class IndexReader:
         # (measured 10x on hot terms driver-side; pruning pays off only
         # where per-shard work runs in parallel, i.e. the distributed
         # plan). Results are identical either way (pruning is exact).
-        fast = self._fast_scored(
-            present,
-            _make_exhaustive_scorer(
-                idf, st["k1"], st["b"], st["avgdl"], k, "bm25",
-                epoch=self._epoch, require_all=require,
-            ),
-        )
+        fast = self._fast_scored(present, idf, k, require_all=require)
         if fast is not None:
             return fast
         df = self.search_df(query, k, mode)
@@ -2915,10 +2845,7 @@ class IndexReader:
         hit = self._fast_hybrid(present, weights, kk, kind="tfidf")
         if hit is not None:
             return hit
-        scorer = _make_exhaustive_scorer(
-            weights, 0, 0, 1.0, kk, "tfidf", epoch=self._epoch
-        )
-        fast = self._fast_scored(present, scorer)
+        fast = self._fast_scored(present, weights, kk, kind="tfidf")
         if fast is not None:
             return fast
         self.last_path = "distributed"
@@ -2926,57 +2853,51 @@ class IndexReader:
             self._postings_for(present).select(
                 "shard", "term", "df", "docs", "tfs", "dls"
             ),
-            scorer,
+            _make_exhaustive_scorer(
+                weights, 0, 0, 1.0, kk, "tfidf", epoch=self._epoch
+            ),
         )
         out = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
         return [(r["doc_id"], r["score"]) for r in out.collect()]
 
-    def resolve_local(
-        self, hits: list[tuple[int, float]]
-    ) -> list[dict]:
-        """Driver-side resolve for serving paths: doc_ids -> (shard,
-        local_idx) via the stats map, then a pyarrow point-read of the
-        matched tok shard dirs (shard partition pruning + local_idx
-        row-group stats — k rows, metadata-sized IO, no Spark job).
-        Same output rows as resolve(), list-of-dict instead of a
-        DataFrame."""
-        from .build import _tok_path, locate_doc_ids
-
-        if not hits:
-            return []
+    def _tok_rows(self, hits, cols: list[str]) -> dict[int, list]:
+        """doc_id -> [``cols`` values] for the docs of ``hits``: doc_ids
+        map to (shard, local_idx) via the stats offsets, then one pyarrow
+        point-read of the matched tok rows through the cached handle
+        (shard partition pruning + local_idx row-group stats — k rows,
+        metadata-sized IO, no Spark job). Docs not found are absent."""
         import pyarrow.dataset as pads
 
         loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
+        if not loc:
+            return {}
+        keys = ["shard", "local_idx"]
         shards = sorted({s for s, _ in loc.values()})
         locals_ = sorted({li for _, li in loc.values()})
-        ds = pads.dataset(
-            _tok_path(self.index_dir), format="parquet", partitioning="hive"
-        )
-        tbl = ds.to_table(
-            columns=["shard", "local_idx", "conv_id", "turn_idx"],
+        tbl = self._read(
+            "tok", columns=keys + cols,
             filter=pads.field("shard").isin(shards)
             & pads.field("local_idx").isin(locals_),
         )
         by_key = {
-            (int(s), int(li)): (c, int(t))
-            for s, li, c, t in zip(
-                tbl.column("shard").to_pylist(),
-                tbl.column("local_idx").to_pylist(),
-                tbl.column("conv_id").to_pylist(),
-                tbl.column("turn_idx").to_pylist(),
-            )
+            (s, li): vals
+            for s, li, *vals in zip(
+                *(tbl.column(c).to_pylist() for c in keys + cols))
         }
-        out = []
-        for d, score in hits:
-            key = loc.get(int(d))
-            if key is None or key not in by_key:
-                continue
-            conv_id, turn_idx = by_key[key]
-            out.append({
-                "conv_id": conv_id, "turn_idx": turn_idx,
-                "doc_id": int(d), "score": float(score),
-            })
-        return out
+        return {d: by_key[key] for d, key in loc.items() if key in by_key}
+
+    def resolve_local(
+        self, hits: list[tuple[int, float]]
+    ) -> list[dict]:
+        """Driver-side resolve for serving paths (see _tok_rows): same
+        output rows as resolve(), list-of-dict instead of a DataFrame."""
+        rows = self._tok_rows(hits, ["conv_id", "turn_idx"])
+        return [
+            {"conv_id": r[0], "turn_idx": int(r[1]),
+             "doc_id": int(d), "score": float(score)}
+            for d, score in hits
+            if (r := rows.get(int(d))) is not None
+        ]
 
     def resolve(self, hits: list[tuple[int, float]]) -> DataFrame:
         """doc_id -> (conv_id, turn_idx) resolution (J1, tree.rs:454-459):
@@ -2984,8 +2905,6 @@ class IndexReader:
         to (shard, local_idx) so the tok scan gets shard PARTITION
         pruning + local_idx row-group pruning (better than filtering a
         computed doc_id column)."""
-        from .build import _tok_path, locate_doc_ids
-
         loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
         rows = [
             (*loc[int(d)], int(d), float(s)) for d, s in hits if int(d) in loc

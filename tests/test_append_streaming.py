@@ -421,3 +421,48 @@ def test_refresh_snapshot_repins_split_size(spark, tmp_path):
                 assert _math.isclose(g[1], w[1], rel_tol=1e-9)
     finally:
         r.close()
+
+
+def test_long_lived_reader_serves_appended_snapshot(spark, tmp_path):
+    """A reader that searched and resolved before append_index must, once
+    a term_stats read finds the pre-append files replaced, serve the
+    appended snapshot: the same (doc_id, score) lists as a fresh reader,
+    and resolve_local must resolve every hit — including hits in the
+    appended shards, which postings and docstore handles listed before
+    the append cannot see."""
+    from indexer_spark.lexer import tokenize
+
+    a, b = _batches(spark)
+    d = str(tmp_path / "longlived")
+    build_index(spark, spark.createDataFrame(a), d, BuildConfig(**CFG))
+    queries = [" ".join(str(t).split()[:3]) for t in a["text"].head(6)]
+    seen = {t for q in queries for t in tokenize(q)}
+    # first query after the append: a term the old reader never looked
+    # up, so its term_stats read hits the replaced files
+    new_term = next(
+        w for text in b["text"] for w in str(text).split()
+        if (tw := tokenize(w)) and tw[0] not in seen
+    )
+    old = IndexReader(spark, d)
+    try:
+        for q in queries:
+            hits = old.search(q, 10)
+            assert len(old.resolve_local(hits)) == len(hits)
+        append_index(spark, spark.createDataFrame(b), d, BuildConfig(**CFG))
+        fresh = IndexReader(spark, d)
+        try:
+            n_base = len(a)
+            saw_appended = False
+            for q in [f"{new_term} {queries[0]}"] + queries:
+                want = fresh.search(q, 10)
+                got = old.search(q, 10)
+                assert got == want, q
+                res = old.resolve_local(got)
+                assert [r["doc_id"] for r in res] == [h for h, _ in got], q
+                assert res == fresh.resolve_local(want), q
+                saw_appended |= any(h >= n_base for h, _ in got)
+            assert saw_appended  # the appended shards were really served
+        finally:
+            fresh.close()
+    finally:
+        old.close()

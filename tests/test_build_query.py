@@ -312,6 +312,7 @@ def test_driver_fast_path_identity(spark, built_index, oracle_index):
         assert got == want, q
         assert fast.search_tfidf(q, k) == dist.search_tfidf(q, k), q
         assert fast.search(q, k, mode="pruned") == want  # mode-independent
+        assert fast.search(q, k, mode="and") == dist.search(q, k, mode="and"), q
     # a 1-byte budget can never cover matched postings -> distributed
     tiny = IndexReader(spark, index_dir, fast_path_bytes=1)
     q = gen_queries()[0][1]
@@ -539,6 +540,9 @@ def test_warm_wire_narrowing_roundtrip():
         assert w.dtype == want_dt, (hi, w.dtype)
         assert np.array_equal(w.astype(np.int64), a)
     assert _narrow_wire(np.array([], dtype=np.int64)).dtype == np.uint8
+    # a negative value has no unsigned form: the array comes back as is
+    neg = np.array([5, -1, 300], dtype=np.int64)
+    assert _narrow_wire(neg) is neg
 
     d = np.arange(0, 300, dtype=np.int64) * 7  # spans two 128-blocks
     tf = (d % 250) + 1
@@ -556,9 +560,13 @@ def test_warm_wire_narrowing_roundtrip():
                 assert g.dtype == np.int64
                 assert np.array_equal(g, want)
     finally:
-        with _DECODED_CACHE._lock:
-            for bi in range(3):
-                _DECODED_CACHE._d.pop(key + (bi,), None)
+        before = _DECODED_CACHE._bytes
+        _DECODED_CACHE.discard([key + (bi,) for bi in range(3)])
+        freed = before - _DECODED_CACHE._bytes
+    # discard keeps the byte counter equal to the resident entries' total
+    assert freed == sum(a.nbytes for a in (d, tf, dl))
+    assert _DECODED_CACHE._bytes == sum(
+        a.nbytes for v in _DECODED_CACHE._d.values() for a in v)
 
 
 def test_parse_bytes():

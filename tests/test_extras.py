@@ -200,6 +200,11 @@ def test_vector_matrix_helpers_match_rowwise():
     assert _list_col_matrix(null_col, 2, 2) is None
     ragged = pa.array([[1.0, 2.0], [3.0]], type=pa.list_(pa.float64()))
     assert _list_col_matrix(ragged, 2, 2) is None
+    # ragged rows whose lengths still sum to n_rows * dim: the total
+    # length check alone would reshape them into a wrong 2x4 matrix
+    ragged_sum = pa.array([[1, 2, 3], [4, 5, 6, 7, 8]],
+                          type=pa.list_(pa.float64()))
+    assert _list_col_matrix(ragged_sum, 2, 4) is None
     # ragged pandas rows raise — even when lengths sum to n*dim, which a
     # bare concatenate+reshape would silently mis-shape
     import pytest
